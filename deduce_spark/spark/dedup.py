@@ -25,13 +25,13 @@ from pyspark.sql import types as T
 
 from deduce_spark.spark.kg import (
     N_BANDS,
-    N_HASHES,
     _MERSENNE,
     _PERM_A,
     _PERM_B,
+    candidate_pairs,
     connected_components,
 )
-from deduce_spark.spark.parallel import fan_out
+from deduce_spark.spark.parallel import cap_hot_keys, fan_out
 
 
 def exact_duplicates(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -258,12 +258,11 @@ def minhash_dedup(
 ) -> DataFrame:
     """(doc_id, canonical_id) for every doc in a near-dup cluster.
 
-    Buckets larger than ``max_bucket`` are dropped whole before the
-    self-join (same cap strategy as ``kg.candidate_pairs``): one hot LSH
-    bucket — template boilerplate at web scale — otherwise emits B²/2 join
-    rows and stalls the stage.  Exact duplicates inside a dropped bucket are
-    still caught by ``exact_dedup``; the cap trades a sliver of near-dup
-    recall for a bounded join.
+    Candidate pairs come from ``kg.candidate_pairs`` — the LSH path the
+    entity surfaces use — and buckets larger than ``max_bucket`` are
+    dropped whole before its self-join.  Exact duplicates inside a dropped
+    bucket are still caught by ``exact_dedup``; the cap trades a sliver of
+    near-dup recall for a bounded join.
 
     ``max_doc_words`` (recommended at crawl scale, e.g. ``1_000_000``)
     clamps each document to its word prefix before shingling, bounding
@@ -272,85 +271,21 @@ def minhash_dedup(
     sigs = minhash_signatures(
         df, text_col, id_col, shingle_words, max_doc_words
     ).cache()
-    rows_per_band = N_HASHES // N_BANDS
-    # cache the banded table: it feeds the hot-bucket count, the anti-join
-    # and BOTH sides of the bucket self-join — without the cache each of
-    # those stages re-evaluates (and re-codegens) the 16-way xxhash64
-    # band projection, which dominates the cold-run wall
-    banded_cached = sigs.select(
-        "doc_id",
-        F.posexplode(
-            F.array(
-                *[
-                    F.xxhash64(
-                        F.lit(b),
-                        F.slice("sig", b * rows_per_band + 1, rows_per_band),
-                    )
-                    for b in range(N_BANDS)
-                ]
-            )
-        ).alias("band", "band_key"),
-    ).cache()
-    # materialize BOTH caches eagerly with one bounded action (the banded
-    # job scans sigs exactly once, populating its cache on the way): the
-    # downstream plan otherwise scans them from several concurrently
-    # launched subtrees (hot-bucket count, self-join l/r, both verify
-    # joins), each recomputing the whole Python signature stage and racing
-    # to populate the same cache (the "Block rdd_N already exists"
-    # warnings).  The operator is already eager (connected_components runs
-    # actions), so this changes no contract.
-    banded_cached.count()
-    banded = banded_cached
-    # map-combinable bucket-size cap: count buckets, keep only the OVER-cap
-    # keys (few by construction: <= n/max_bucket, zero on healthy data) and
-    # anti-join them away.  NOT a window keyed on the raw bucket — a window
-    # materializes each hot bucket on one task (sort included) before
-    # filtering, exactly the straggler the cap exists to prevent; and NOT a
-    # semi-join against the huge under-cap key set — the over-cap side is
-    # the broadcastable one.
-    hot_buckets = (
-        banded.groupBy("band", "band_key")
-        .agg(F.count(F.lit(1)).alias("bucket_size"))
-        .filter(F.col("bucket_size") > max_bucket)
-        .select("band", "band_key")
+    # no type column: the LSH band alone is the bucket.  candidate_pairs
+    # materializes its banded table with one bounded action that scans sigs
+    # exactly once, populating this cache on the way; the verify joins then
+    # read the cache instead of re-running the Python signature stage
+    pairs = candidate_pairs(
+        sigs.withColumnRenamed("doc_id", "surface_id"),
+        N_BANDS,
+        threshold,
+        max_bucket,
     )
-    banded = banded.join(
-        F.broadcast(hot_buckets), ["band", "band_key"], "left_anti"
-    )
-    pairs = (
-        banded.alias("l")
-        .join(
-            banded.alias("r"),
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.band_key") == F.col("r.band_key"))
-            & (F.col("l.doc_id") < F.col("r.doc_id")),
-        )
-        .select(F.col("l.doc_id").alias("a"), F.col("r.doc_id").alias("b"))
-        .distinct()
-    )
-    # verify candidates with the signature-estimated jaccard
-    est = (
-        pairs.join(sigs.withColumnRenamed("doc_id", "a").withColumnRenamed("sig", "sig_a"), "a")
-        .join(sigs.withColumnRenamed("doc_id", "b").withColumnRenamed("sig", "sig_b"), "b")
-        .withColumn(
-            "est_jaccard",
-            # zip_with avoids arrays_zip's per-element struct allocation
-            # (measured 6x faster on the kg.py verify stage)
-            F.expr(
-                "aggregate(zip_with(sig_a, sig_b, (x, y) -> IF(x = y, 1, 0)),"
-                " 0, (acc, v) -> acc + v)"
-            )
-            / F.lit(N_HASHES),
-        )
-        .filter(F.col("est_jaccard") >= threshold)
-        .select("a", "b")
-    )
-    comp = connected_components(est)
+    comp = connected_components(pairs)
     # comp is materialized (driver union-find or checkpointed star rounds);
     # the returned frame depends only on it and the input scan, so the
-    # intra-operator caches can be released instead of leaking per call
+    # signature cache can be released instead of leaking per call
     sigs.unpersist(False)
-    banded_cached.unpersist(False)
     return (
         df.select(F.col(id_col).alias("doc_id"))
         .join(comp.withColumnRenamed("surface_id", "doc_id"), "doc_id", "left")
@@ -475,15 +410,15 @@ def simhash_near_dupes(
     """(a, b, hamming) pairs with hamming(simhash) <= max_hamming.
 
     Pigeonhole bucketing by four 16-bit chunks; buckets above ``max_bucket``
-    are dropped whole before the self-join (see ``minhash_dedup``) so a hot
+    are dropped whole before the self-join (``cap_hot_keys``) so a hot
     chunk value cannot go quadratic at scale."""
     # sigs feeds only the chunk explode (the simhash value rides along in
-    # chunks), so the cache worth having is chunks, not sigs
+    # chunks), so the table worth materializing is chunks, not sigs
     sigs = simhash_signatures(df, text_col, id_col)
-    # cached EAGERLY for the same reason as minhash_dedup's banded table:
-    # three downstream subtrees consume it (hot-chunk count, anti-join,
-    # self-join l/r) and would otherwise concurrently recompute the whole
-    # Python simhash stage, racing to populate the cache
+    # materialized EAGERLY: three downstream subtrees consume it (hot-chunk
+    # count, anti-join, self-join l/r) and would otherwise concurrently
+    # recompute the whole Python simhash stage.  A local checkpoint, as in
+    # kg.candidate_pairs: the returned plan is lazy and reads it
     chunks = sigs.select(
         "doc_id",
         "simhash",
@@ -495,19 +430,8 @@ def simhash_near_dupes(
                 ]
             )
         ).alias("chunk_idx", "chunk_val"),
-    ).cache()
-    chunks.count()
-    # map-combinable bucket-size cap (see minhash_dedup): anti-join the few
-    # OVER-cap chunk values away; no window keyed on the raw bucket column
-    hot_buckets = (
-        chunks.groupBy("chunk_idx", "chunk_val")
-        .agg(F.count(F.lit(1)).alias("bucket_size"))
-        .filter(F.col("bucket_size") > max_bucket)
-        .select("chunk_idx", "chunk_val")
-    )
-    chunks = chunks.join(
-        F.broadcast(hot_buckets), ["chunk_idx", "chunk_val"], "left_anti"
-    )
+    ).localCheckpoint(eager=True)
+    chunks = cap_hot_keys(chunks, ["chunk_idx", "chunk_val"], max_bucket)
     cand = (
         chunks.alias("l")
         .join(

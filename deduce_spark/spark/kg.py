@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from deduce_spark.spark.checkpointing import CheckpointArg, make_checkpointer
+from deduce_spark.spark.parallel import cap_hot_keys
 
 N_HASHES = 64
 N_BANDS = 16  # used by doc-level dedup: 16 bands x 4 rows, jaccard >~ 0.5
@@ -123,80 +124,85 @@ def surface_signatures(surf: DataFrame) -> DataFrame:
     )
 
 
+def _band_explode(sigs: DataFrame, n_bands: int = SURFACE_BANDS) -> DataFrame:
+    """One row per (signature, band): every column but ``sig``, plus the
+    band index and the xxhash64 of that band's slice of the signature."""
+    rows_per_band = N_HASHES // n_bands
+    return sigs.select(
+        *[c for c in sigs.columns if c != "sig"],
+        F.posexplode(
+            F.array(
+                *[
+                    F.xxhash64(
+                        F.lit(b),
+                        F.slice("sig", b * rows_per_band + 1, rows_per_band),
+                    )
+                    for b in range(n_bands)
+                ]
+            )
+        ).alias("band", "band_key"),
+    )
+
+
+def _verified(
+    pairs: DataFrame, sigs_a: DataFrame, sigs_b: DataFrame, min_jaccard: float
+) -> DataFrame:
+    """The (a, b) pairs whose signatures (a from ``sigs_a``, b from
+    ``sigs_b``) have an estimated jaccard >= ``min_jaccard``."""
+    # zip_with avoids the per-element struct allocation of
+    # arrays_zip+filter: measured 6x faster on the verify stage
+    est_jaccard = F.expr(
+        "aggregate(zip_with(sig_a, sig_b, (x, y) -> IF(x = y, 1, 0)),"
+        " 0, (acc, v) -> acc + v)"
+    ) / F.lit(N_HASHES)
+    return (
+        pairs.join(sigs_a.select(F.col("surface_id").alias("a"),
+                                 F.col("sig").alias("sig_a")), "a")
+        .join(sigs_b.select(F.col("surface_id").alias("b"),
+                            F.col("sig").alias("sig_b")), "b")
+        .filter(est_jaccard >= min_jaccard)
+        .select("a", "b")
+    )
+
+
 def candidate_pairs(
     sigs: DataFrame,
     n_bands: int = SURFACE_BANDS,
     min_jaccard: float = SURFACE_JACCARD,
     max_bucket: int = 64,
 ) -> DataFrame:
-    """LSH banding over signatures -> bucket self-join (same type only) ->
-    pairs verified by the signature-estimated jaccard.
+    """LSH banding over (surface_id, [type], sig) signatures -> bucket
+    self-join -> (a, b) pairs verified by the signature-estimated jaccard.
 
-    Buckets larger than ``max_bucket`` are dropped whole (deterministic):
-    a bucket with B members costs B²/2 join rows, so one hot bucket —
-    boilerplate strings, template dates — can dominate the entire stage at
-    scale.  Banding is native (xxhash64 over sig slices), the verify is a
-    higher-order array compare — no extra UDF."""
-    rows_per_band = N_HASHES // n_bands
-    # eagerly cached: the hot-bucket count and both self-join sides would
-    # otherwise concurrently recompute the band projection (and, through
-    # it, the Python signature stage) — see dedup.minhash_dedup
-    banded = sigs.select(
-        "surface_id",
-        "type",
-        F.posexplode(
-            F.array(
-                *[
-                    F.xxhash64(F.lit(b), F.slice("sig", b * rows_per_band + 1, rows_per_band))
-                    for b in range(n_bands)
-                ]
-            )
-        ).alias("band", "band_key"),
-    ).cache()
-    banded.count()
-    # map-combinable bucket-size cap: count buckets, keep only the OVER-cap
-    # keys (few by construction: <= n/max_bucket, zero on healthy data) and
-    # anti-join them away.  NOT a window keyed on the raw bucket — a window
-    # would materialize each hot bucket (sorted) on a single task before
-    # filtering it, exactly the straggler the cap exists to prevent.
-    hot_buckets = (
-        banded.groupBy("type", "band", "band_key")
-        .agg(F.count(F.lit(1)).alias("bucket_size"))
-        .filter(F.col("bucket_size") > max_bucket)
-        .select("type", "band", "band_key")
-    )
-    banded = banded.join(
-        F.broadcast(hot_buckets), ["type", "band", "band_key"], "left_anti"
+    With a ``type`` column (entity surfaces) only same-type signatures
+    share a bucket; without one (documents) the band alone is the bucket.
+    Buckets larger than ``max_bucket`` are dropped whole
+    (:func:`cap_hot_keys`).  Banding is native (xxhash64 over sig slices),
+    the verify is a higher-order array compare — no extra UDF."""
+    keys = (["type"] if "type" in sigs.columns else []) + ["band", "band_key"]
+    # eagerly materialized: the hot-bucket count and both self-join sides
+    # would otherwise concurrently recompute the band projection (and,
+    # through it, the Python signature stage), racing to populate the
+    # signature cache.  A local checkpoint, not a cache: the returned plan
+    # reads it, so it must outlive this call, and the CacheManager would
+    # hold a cache for the whole session — checkpointed blocks go when the
+    # plan does
+    banded = cap_hot_keys(
+        _band_explode(sigs, n_bands).localCheckpoint(eager=True),
+        keys,
+        max_bucket,
     )
     pairs = (
         banded.alias("l")
         .join(
             banded.alias("r"),
-            (F.col("l.type") == F.col("r.type"))
-            & (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.band_key") == F.col("r.band_key"))
-            & (F.col("l.surface_id") < F.col("r.surface_id")),
+            [F.col(f"l.{k}") == F.col(f"r.{k}") for k in keys]
+            + [F.col("l.surface_id") < F.col("r.surface_id")],
         )
         .select(F.col("l.surface_id").alias("a"), F.col("r.surface_id").alias("b"))
         .distinct()
     )
-    return (
-        pairs.join(sigs.select(F.col("surface_id").alias("a"),
-                               F.col("sig").alias("sig_a")), "a")
-        .join(sigs.select(F.col("surface_id").alias("b"),
-                          F.col("sig").alias("sig_b")), "b")
-        .withColumn(
-            "est_jaccard",
-            # zip_with avoids the per-element struct allocation of
-            # arrays_zip+filter: measured 6x faster on the verify stage
-            F.expr(
-                "aggregate(zip_with(sig_a, sig_b, (x, y) -> IF(x = y, 1, 0)),"
-                " 0, (acc, v) -> acc + v)"
-            ) / F.lit(N_HASHES),
-        )
-        .filter(F.col("est_jaccard") >= min_jaccard)
-        .select("a", "b")
-    )
+    return _verified(pairs, sigs, sigs, min_jaccard)
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -360,6 +366,11 @@ def canonicalize(
     surface_map: (surface, type, surface_id, entity_id)
     nodes:       (entity_id, type, canonical_form, n_mentions)
 
+    ``surface_map`` is returned cached and materialized, and ``nodes``
+    reads it: the cache belongs to the caller, who unpersists it once
+    done with both.  Every other cache this call makes is released before
+    it returns.
+
     Only name-like types go through MinHash-LSH fuzzy merging; DATUM/PHI
     surfaces are identity-canonicalized — '10 oktober 2018' and
     '11 oktober 2018' are different entities even though their edit
@@ -382,6 +393,8 @@ def canonicalize(
     sigs = surface_signatures(fuzzy).cache()
     pairs = candidate_pairs(sigs)
     comp = connected_components(pairs)
+    # comp is materialized (driver union-find or checkpointed star rounds)
+    sigs.unpersist()
     surface_map = (
         surf.join(comp, "surface_id", "left")
         .withColumn("entity_id", F.coalesce("component", "surface_id"))
@@ -389,6 +402,8 @@ def canonicalize(
     ).cache()  # consumed by canon + nodes here AND by the caller's
     # triples() broadcast join — uncached, every consumer re-runs the
     # whole LSH chain (measured 78s -> 31s for the sf0.1 triples query)
+    surface_map.count()
+    surf.unpersist()
     weights = anchor_weights
     if weights is None and anchors is not None:
         weights = anchor_surface_weights(anchors, mentions)
@@ -808,25 +823,6 @@ def triangle_count(edges: DataFrame, max_degree: int = 64) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _band_explode(sigs: DataFrame, n_bands: int = SURFACE_BANDS) -> DataFrame:
-    rows_per_band = N_HASHES // n_bands
-    return sigs.select(
-        "surface_id",
-        "type",
-        F.posexplode(
-            F.array(
-                *[
-                    F.xxhash64(
-                        F.lit(b),
-                        F.slice("sig", b * rows_per_band + 1, rows_per_band),
-                    )
-                    for b in range(n_bands)
-                ]
-            )
-        ).alias("band", "band_key"),
-    )
-
-
 def incremental_canonicalize(
     new_mentions: DataFrame,
     surface_map: DataFrame,
@@ -882,15 +878,7 @@ def incremental_canonicalize(
         exist_fuzzy.select("surface_id", "type", "surface")
     )
     nb = _band_explode(nsigs)
-    eb = _band_explode(esigs)
-    # map-combinable bucket cap (see candidate_pairs): no raw-bucket window
-    hot_eb = (
-        eb.groupBy("type", "band", "band_key")
-        .agg(F.count(F.lit(1)).alias("bs"))
-        .filter(F.col("bs") > max_bucket)
-        .select("type", "band", "band_key")
-    )
-    eb = eb.join(F.broadcast(hot_eb), ["type", "band", "band_key"], "left_anti")
+    eb = cap_hot_keys(_band_explode(esigs), ["type", "band", "band_key"], max_bucket)
     cand = (
         nb.alias("n")
         .join(
@@ -900,34 +888,15 @@ def incremental_canonicalize(
             & (F.col("n.band_key") == F.col("e.band_key")),
         )
         .select(
-            F.col("n.surface_id").alias("n_sid"),
-            F.col("e.surface_id").alias("e_sid"),
+            F.col("n.surface_id").alias("a"),  # novel
+            F.col("e.surface_id").alias("b"),  # existing
         )
         .distinct()
     )
-    verified = (
-        cand.join(
-            nsigs.select(F.col("surface_id").alias("n_sid"),
-                         F.col("sig").alias("sig_n")), "n_sid")
-        .join(
-            esigs.select(F.col("surface_id").alias("e_sid"),
-                         F.col("sig").alias("sig_e")), "e_sid")
-        .withColumn(
-            "est_jaccard",
-            F.expr(
-                "aggregate(zip_with(sig_n, sig_e, (x, y) -> IF(x = y, 1, 0)),"
-                " 0, (acc, v) -> acc + v)"
-            ) / F.lit(N_HASHES),
-        )
-        .filter(F.col("est_jaccard") >= min_jaccard)
-        .select("n_sid", "e_sid")
-    )
     adopt = (
-        verified.join(
-            existing.select(F.col("surface_id").alias("e_sid"), "entity_id"),
-            "e_sid",
-        )
-        .groupBy("n_sid")
+        _verified(cand, nsigs, esigs, min_jaccard)
+        .join(existing.select(F.col("surface_id").alias("b"), "entity_id"), "b")
+        .groupBy("a")
         .agg(F.min("entity_id").alias("adopted"))
     )
 
@@ -942,7 +911,7 @@ def incremental_canonicalize(
     # a cluster adopts the minimum existing entity any member matched
     cluster_adopt = (
         novel_assigned.join(
-            adopt, novel_assigned.surface_id == adopt.n_sid, "left"
+            adopt, novel_assigned.surface_id == adopt.a, "left"
         )
         .groupBy("cluster")
         .agg(F.min("adopted").alias("cluster_entity"))

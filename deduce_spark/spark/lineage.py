@@ -8,8 +8,8 @@ every run and on every cluster size.  The expensive stage (per-page
 annotate, CPU-bound, no shuffle) is checkpointed at part granularity:
 
 1. ``part_manifest`` fingerprints each part of the *input* with an
-   order-independent content hash (bit_xor of per-row xxhash64 — commutative,
-   so partition layout / task order cannot change it);
+   order-independent content hash (the sum of per-row xxhash64 mod 2^64 —
+   commutative, so partition layout / task order cannot change it);
 2. completed parts are recorded as lineage rows
    ``(run_id, part_id, input_hash, rows_in, rows_out, status, wall_s)``,
    appended ONLY AFTER the output snapshot committed (see icetable.write —
@@ -37,10 +37,11 @@ import json
 import os
 import time
 import uuid
+from decimal import Decimal
 from pathlib import Path
 from typing import Optional
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 DEFAULT_N_PARTS = 64
@@ -53,15 +54,29 @@ def with_part_id(pages: DataFrame, n_parts: int = DEFAULT_N_PARTS) -> DataFrame:
     )
 
 
-def part_manifest(pages_with_part: DataFrame) -> DataFrame:
-    """(part_id, input_hash, rows_in) — content fingerprint per part.
+def _row_hash_sum(*cols: Column | str) -> Column:
+    """Aggregate: the sum of per-row xxhash64(cols) mod 2^64, shifted into
+    the signed long range.
 
-    bit_xor is commutative/associative: the hash is independent of row
-    order, task count, and file layout.  One narrow aggregation over the
-    key columns only (Catalyst prunes everything else from the scan).
+    A sum is commutative/associative, so the hash is independent of row
+    order, task count, and file layout.  Unlike bit_xor it counts
+    multiplicity: with bit_xor a row present an even number of times
+    cancels, so frames differing only in which rows repeat collide and a
+    resume falsely skips.  The decimal accumulator cannot overflow (ANSI
+    mode raises on a long overflow) below ~10^19 rows."""
+    total = F.sum(F.xxhash64(*cols).cast("decimal(38,0)"))
+    return (
+        F.pmod(total, F.lit(Decimal(1 << 64))) - F.lit(Decimal(1 << 63))
+    ).cast("long")
+
+
+def part_manifest(pages_with_part: DataFrame) -> DataFrame:
+    """(part_id, input_hash, rows_in) — content fingerprint per part
+    (:func:`_row_hash_sum` of the key columns).  One narrow aggregation over
+    the key columns only (Catalyst prunes everything else from the scan).
     """
     return pages_with_part.groupBy("part_id").agg(
-        F.expr("bit_xor(xxhash64(url, cast(warc_ts as string)))").alias("input_hash"),
+        _row_hash_sum("url", F.col("warc_ts").cast("string")).alias("input_hash"),
         F.count(F.lit(1)).alias("rows_in"),
     )
 
@@ -166,11 +181,11 @@ def part_records(
 
 def content_fingerprint(df: DataFrame, *cols: str) -> str:
     """Order-independent content fingerprint of a frame over ``cols``:
-    ``"<rowcount>-<hex bit_xor of xxhash64(cols)>"`` — the stage-resume
+    ``"<rowcount>-<hex of _row_hash_sum(cols)>"`` — the stage-resume
     key shared by jobs/curate_corpus.py and jobs/schedule_crawl.py."""
     row = df.agg(
         F.count(F.lit(1)).alias("n"),
-        F.bit_xor(F.xxhash64(*cols)).alias("x"),
+        _row_hash_sum(*cols).alias("x"),
     ).collect()[0]
     return f"{int(row['n'])}-{int(row['x'] or 0):x}"
 

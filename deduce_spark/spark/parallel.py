@@ -78,3 +78,31 @@ def fan_out(
     if key is not None:
         return df.repartition(target, F.col(key))
     return df.repartition(target)
+
+
+def cap_hot_keys(df: DataFrame, keys: list[str], cap: int) -> DataFrame:
+    """Drop every row whose ``keys`` group holds more than ``cap`` rows.
+
+    The bucketed self-joins (LSH bands, simhash chunks, hyperplane
+    buckets, IVF clusters) emit B²/2 rows for a bucket of B members, so
+    one hot bucket — template boilerplate at web scale, a degenerate
+    embedding region — would dominate the whole stage.  Dropping it whole
+    is deterministic and trades a sliver of recall for a bounded join.
+
+    Map-combinable: count each key, keep only the OVER-cap keys (few by
+    construction: at most n/cap, none on healthy data), broadcast them and
+    anti-join them away.  NOT a window keyed on the raw bucket — a window
+    materializes each hot bucket (sorted) on one task before filtering,
+    exactly the straggler the cap exists to prevent; and NOT a semi-join
+    against the under-cap keys, the huge side — the over-cap side is the
+    broadcastable one.
+
+    ``df`` is read twice (the count and the anti-join), so a caller whose
+    ``df`` is expensive to recompute materializes it first."""
+    hot = (
+        df.groupBy(*keys)
+        .agg(F.count(F.lit(1)).alias("bucket_size"))
+        .filter(F.col("bucket_size") > cap)
+        .select(*keys)
+    )
+    return df.join(F.broadcast(hot), keys, "left_anti")

@@ -121,6 +121,27 @@ def test_part_manifest_is_layout_independent(spark, pages_path, tmp_path):
     assert a == b
 
 
+def test_fingerprints_count_repeated_rows(spark):
+    # every row twice: same row count and the same bit_xor (0) on both
+    # sides, but different multisets, so a resume must not skip
+    import datetime as dt
+
+    ts = dt.datetime(2024, 1, 1)
+
+    def pages(urls):
+        return spark.createDataFrame(
+            [(u, ts) for u in urls for _ in range(2)],
+            "url string, warc_ts timestamp",
+        ).withColumn("part_id", F.lit(0))
+
+    a, b = pages(["u1", "u2"]), pages(["u3", "u4"])
+    assert (lin.content_fingerprint(a, "url", "warc_ts")
+            != lin.content_fingerprint(b, "url", "warc_ts"))
+    (ma,), (mb,) = lin.part_manifest(a).collect(), lin.part_manifest(b).collect()
+    assert ma.rows_in == mb.rows_in == 4
+    assert ma.input_hash != mb.input_hash
+
+
 def test_person_col_through_job(spark, engine, tmp_path):
     # A8 through the production entry: per-page known person drives
     # patient-tagged mentions end to end

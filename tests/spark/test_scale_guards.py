@@ -8,7 +8,7 @@ import zlib
 import pytest
 from pyspark.sql import functions as F
 
-from deduce_spark.spark import dedup, multimodal, relational, similarity
+from deduce_spark.spark import dedup, kg, multimodal, relational, similarity
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -59,6 +59,45 @@ class TestBucketCaps:
             vecs, k=3, dim=8, n_planes=4, n_tables=2, max_bucket=8
         )
         assert capped.count() == 0
+
+    def test_kg_candidate_pairs_hot_bucket_dropped(self, spark):
+        # 40 surfaces of one type with one signature share every band
+        # bucket: a cap below 40 drops them all, a cap above pairs them all
+        sigs = spark.range(40).select(
+            F.col("id").alias("surface_id"),
+            F.lit("PERSOON").alias("type"),
+            F.array([F.lit(i).cast("long") for i in range(kg.N_HASHES)])
+            .alias("sig"),
+        )
+        assert kg.candidate_pairs(sigs, max_bucket=16).count() == 0
+        merged = kg.connected_components(
+            kg.candidate_pairs(sigs, max_bucket=64)
+        )
+        assert {r["component"] for r in merged.collect()} == {0}
+
+    def test_incremental_existing_hot_bucket_dropped(self, spark):
+        # "aaa".."a"*42 share the one shingle "aaa", hence one signature:
+        # batch canonicalization merges all 40 into one entity, and a novel
+        # "a"*50 LSH-matches it in every band of the existing side
+        old = spark.createDataFrame(
+            [("a" * n, "persoon") for n in range(3, 43)], "text string, tag string"
+        )
+        surface_map, _ = kg.canonicalize(old)
+        (entity,) = {r["entity_id"] for r in surface_map.collect()}
+        new = spark.createDataFrame([("a" * 50, "persoon")], "text string, tag string")
+
+        def novel_entity(max_bucket):
+            updated, _ = kg.incremental_canonicalize(
+                new, surface_map, max_bucket=max_bucket
+            )
+            row = updated.filter(F.col("surface") == "a" * 50).first()
+            updated.unpersist()
+            return row["entity_id"], row["surface_id"]
+
+        capped_entity, own_id = novel_entity(16)
+        assert capped_entity == own_id != entity
+        assert novel_entity(64)[0] == entity
+        surface_map.unpersist()
 
 
 class TestQuadraticGates:
